@@ -66,8 +66,8 @@ INCLUDES_ROWS = [
     # matches N100AA via lower/trim; callsign override + group enrichment
     (0, "EMS", "LIFEFLT1", " N100AA ", "National"),
     # duplicate registration — the reference MUTATES the shared feature per
-    # match (task.ts:227-233), so this LAST truthy callsign/group wins while
-    # the Set guard keeps row 0's output position (task.ts:235-238)
+    # match (task.ts:227-233), so this LAST truthy callsign/group wins; the
+    # feature is emitted once, as includes_join keys this side by registration
     (1, "EMS", "DUPE", "N100AA", "International"),
     # matches rotorcraft; no callsign override (falsy ⇒ keep aircraft callsign)
     (2, "FIRE", None, "n200hh", "Fire"),

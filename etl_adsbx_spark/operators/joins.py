@@ -57,16 +57,15 @@ def includes_join(
     - each matching include MUTATES the shared Feature object
       (task.ts:227-233): a *truthy* callsign/group overwrites, so when
       several includes share a registration the LAST truthy value per field
-      wins — while the Set guard (task.ts:235-238) pins the feature's output
-      position to the FIRST matching include.
+      wins; the Set guard (task.ts:235-238) emits that feature once.
     - non-matching aircraft drop (inner join ≡ the `ids.has(id)` gate).
 
     Spark form: pre-aggregate the includes to one row per key —
-    ``min(_idx)`` for the first-match position, ``max_by(field, idx-if-
-    truthy)`` for the last truthy override (max_by ignores NULL ordering
-    keys, so rows with falsy fields never win) — then one broadcast inner
-    join. The dimension side is O(10²) rows: zero shuffle, and because it
-    is unique per key the join cannot fan out.
+    ``max_by(field, idx-if-truthy)`` for the last truthy override (max_by
+    ignores NULL ordering keys, so rows with falsy fields never win) — then
+    one broadcast inner join. The dimension side is O(10²) rows: zero
+    shuffle, and because it is unique per key the join cannot fan out — an
+    ``aircraft`` side unique per id gives one output row per id (R25).
     """
     truthy_idx = lambda c: F.when(  # noqa: E731
         F.col(c).isNotNull() & (F.col(c) != ""), F.col("_idx")
@@ -77,7 +76,6 @@ def includes_join(
         )
         .groupBy(normalize_key("registration").alias("_inc_key"))
         .agg(
-            F.min("_idx").alias("_inc_idx"),
             F.max_by(F.col("callsign"), truthy_idx("callsign")).alias("_inc_callsign"),
             F.max_by(F.col("group"), truthy_idx("group")).alias("_inc_group"),
         )

@@ -5,13 +5,14 @@ re-expressed as one declarative plan.
       → row transform (one `select`, codegen'd)    R5-R20
       → last-write-wins dedup per id               R21
       → includes broadcast join + enrichment       R22-R24
-      → first-wins output dedup                    R25/R26
+        (one row per id, R25/R26: both join sides are keyed by id)
       → Feature nesting / FeatureCollection sink   R20/R28
 
 Catalyst fuses R5-R20 into a single narrow stage; the only shuffles are
-the two keyed dedups (hash agg, map-side partial); the includes join is a
-broadcast (zero shuffle). At 100 TB this plan holds: dedup keys (aircraft
-ids) are high-cardinality/low-skew, and the dimension side is O(10²) rows.
+the id dedup and the includes pre-aggregate (hash aggs, map-side partial);
+the includes join is a broadcast (zero shuffle). At 100 TB this plan holds:
+dedup keys (aircraft ids) are high-cardinality/low-skew, and the dimension
+side is O(10²) rows.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions import scalar as S
-from .operators.dedup import first_wins, last_wins
+from .operators.dedup import last_wins
 from .operators.joins import includes_join
 
 
@@ -65,26 +66,24 @@ def transform(aircraft: DataFrame, batch_time: dt.datetime | None = None,
 
 def control(
     aircraft: DataFrame,
-    includes: DataFrame | None = None,
+    includes: DataFrame,
     filtering: bool = True,
     hostile_enabled: bool = False,
     batch_time: dt.datetime | None = None,
 ) -> DataFrame:
     """Full per-batch pipeline → flat feature rows (nest via
-    ``to_features``). Mirrors control() (task.ts:115-258)."""
+    ``to_features``). Mirrors control() (task.ts:115-258).
+
+    One row per id (Set guard, R25): both join sides are keyed by id.
+    Row order, and so feature order in the document, is unspecified; the
+    reference's includes-list order (quirk #5) is not reproduced."""
     feats = transform(aircraft, batch_time, hostile_enabled)
     # R21: Map-upsert — last row per id in ingestion order wins (task.ts:136)
     deduped = last_wins(feats, "id", "_idx")
-    if includes is not None and filtering:
-        joined = includes_join(deduped, includes)
-        # R25: first-wins by id in *includes-list* order (quirk #5). The
-        # pre-aggregated includes side makes the join unique per id already;
-        # first_wins is kept as the explicit Set-guard operator
-        # (task.ts:235-238) and is a no-op hash-agg here.
-        return first_wins(joined, "id", "_inc_idx").drop("_inc_idx")
+    if filtering:
+        return includes_join(deduped, includes)
     # ADSBX_INCLUDES_FILTERING=false branch (task.ts:241-249): the includes
-    # list is NOT consulted at all — every deduped feature passes through
-    # unenriched; the Set guard is a no-op because Map keys are unique.
+    # list is NOT consulted — every deduped feature passes through unenriched.
     return deduped
 
 

@@ -15,6 +15,7 @@ execute anything extra.
 
 from __future__ import annotations
 
+import warnings
 from collections import deque
 from collections.abc import Callable
 from typing import Any
@@ -33,6 +34,8 @@ _hook: Callable[[str, str, Any], None] | None = None
 #: 1024 covers any release interval the bench uses; an id that falls off
 #: the end is simply left to the ContextCleaner, the pre-r11 behavior).
 _live_pins: deque[int] = deque(maxlen=1024)
+
+_unpersist_warned = False  # release_pins warns once per process
 
 
 def set_step_plan_hook(
@@ -108,7 +111,9 @@ def release_pins() -> int:
     persistent-RDD registration (blocking, so a caller that immediately
     re-measures sees them gone). No RDD reference is ever held on the
     Python side, so pins in sessions that never call this stay eligible
-    for normal ContextCleaner cleanup."""
+    for normal ContextCleaner cleanup. A failed unpersist never raises,
+    but the first one warns, so a Spark API break shows up."""
+    global _unpersist_warned
     n = 0
     if not _live_pins:
         return 0
@@ -124,8 +129,11 @@ def release_pins() -> int:
         try:
             jsc.unpersistRDD(rdd_id, True)
             n += 1
-        except Exception:  # noqa: BLE001 — already cleaned / gone
-            pass
+        except Exception as exc:  # noqa: BLE001 — freeing is best-effort
+            if not _unpersist_warned:
+                _unpersist_warned = True
+                warnings.warn(f"release_pins: unpersistRDD failed ({exc!r}); "
+                              "blocks left to the ContextCleaner", RuntimeWarning)
     return n
 
 

@@ -5,11 +5,12 @@ has one — ``events``. We map it deterministically onto the ADS-B
 observation schema (each user is an "aircraft", each event an observation
 tick), then run the REAL pipeline: schema'd scan → R5-R20 transform →
 last-write-wins dedup (R21) → includes broadcast join + enrichment
-(R23/R24) → first-wins output dedup (R25) → Feature assembly (R20).
+(R23/R24) → Feature assembly (R20). The output is one row per id (R25)
+because both sides of the join are keyed by id.
 
 Everything downstream of the mapping is exactly the production plan, so the
-smoke check exercises scan / filter / project / broadcast-join / two keyed
-dedups / nested-struct sink in one query.
+smoke check exercises scan / filter / project / keyed dedup / includes
+pre-aggregate / broadcast-join / nested-struct sink in one query.
 """
 
 from __future__ import annotations

@@ -99,6 +99,13 @@ def default_driver_xms() -> str:
     return f"{min(16, xmx_gb)}g"
 
 
+def driver_java_options() -> str:
+    """The pre-touched heap floor, then ``SPARK_GRAFT_DRIVER_JAVA_OPTS``:
+    the JVM takes the last of a repeated flag, so the user's flags win."""
+    return (f"-Xms{default_driver_xms()} -XX:+AlwaysPreTouch "
+            + os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")).strip()
+
+
 def get_spark(app_name: str = "etl_adsbx_spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
@@ -176,14 +183,7 @@ def get_spark(app_name: str = "etl_adsbx_spark", master: str | None = None) -> S
         # (outside any measured region) rather than inside queries — see
         # default_driver_xms for the measured stall pathology. Applied at
         # JVM launch; a no-op when an existing session is reused.
-        # User-supplied options (SPARK_GRAFT_DRIVER_JAVA_OPTS — e.g. GC
-        # logging flags) are merged in, not clobbered (r11 ADVICE, low);
-        # the heap floor itself is overridden via SPARK_GRAFT_DRIVER_XMS.
-        .config(
-            "spark.driver.extraJavaOptions",
-            (os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "") + " "
-             + f"-Xms{default_driver_xms()} -XX:+AlwaysPreTouch").strip(),
-        )
+        .config("spark.driver.extraJavaOptions", driver_java_options())
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()

@@ -10,6 +10,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _feature_collection(features: DataFrame) -> tuple[int, str]:
+    """One collect → (feature count, FeatureCollection document)."""
+    rows = features.select(F.to_json(F.struct(*features.columns)).alias("j")).collect()
+    docs = [json.loads(r.j) for r in rows]
+    return len(docs), json.dumps({"type": "FeatureCollection", "features": docs},
+                                 separators=(",", ":"))
+
+
 def feature_collection_json(features: DataFrame) -> str:
     """Assemble the single FeatureCollection document for the batch.
 
@@ -18,18 +26,15 @@ def feature_collection_json(features: DataFrame) -> str:
     is the correct shape — this is the one place `collect()` is legitimate.
     For unbounded outputs use ``write_json`` instead.
     """
-    docs = features.select(F.to_json(F.struct(*features.columns)).alias("j")).collect()
-    return json.dumps(
-        {"type": "FeatureCollection", "features": [json.loads(r.j) for r in docs]},
-        separators=(",", ":"),
-    )
+    return _feature_collection(features)[1]
 
 
 def submit(features: DataFrame, post_fn: Callable[[str], None]) -> int:
     """`submit()` equivalent (task.ts:257): POST the FeatureCollection.
-    Returns the feature count (the reference logs ids.size, task.ts:251)."""
-    n = features.count()
-    post_fn(feature_collection_json(features))
+    Returns the feature count (the reference logs ids.size, task.ts:251)
+    from the collect that builds the document: one Spark action."""
+    n, doc = _feature_collection(features)
+    post_fn(doc)
     return n
 
 

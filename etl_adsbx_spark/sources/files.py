@@ -1,8 +1,8 @@
 """File/JSON sources with declared schemas.
 
 Reference parity: ingestion is schema-validated at the boundary
-(`res.typed(...)`, task.ts:131-134) — FAILFAST is the validated path,
-PERMISSIVE + `_corrupt_record` the quarantine option (SURVEY.md §1.3).
+(`res.typed(...)`, task.ts:131-134) — FAILFAST ``parse_envelope`` is the
+validated path, PERMISSIVE ``quarantine`` keeps the rejects (SURVEY.md §1.3).
 """
 
 from __future__ import annotations
@@ -18,27 +18,19 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def parse_envelope(payload: DataFrame, col: str = "value", strict: bool = True) -> DataFrame:
+def parse_envelope(payload: DataFrame, col: str = "value") -> DataFrame:
     """Parse raw JSON payload strings into validated envelope rows and
     explode the aircraft array (R4), adding the ingestion-order `_idx`
     that replaces JS loop order (SURVEY.md §7 hard-point 1).
 
-    strict=True → FAILFAST (malformed payload aborts, matching res.typed);
-    strict=False → PERMISSIVE with corrupt-record quarantine.
+    FAILFAST: a malformed payload aborts, matching res.typed.
     """
-    mode = "FAILFAST" if strict else "PERMISSIVE"
-    schema = ENVELOPE_SCHEMA
-    if not strict:
-        schema = StructType(
-            [*ENVELOPE_SCHEMA.fields, StructField("_corrupt_record", StringType(), True)]
-        )
     parsed = payload.select(
-        F.from_json(F.col(col), schema, {"mode": mode}).alias("env")
+        F.from_json(F.col(col), ENVELOPE_SCHEMA, {"mode": "FAILFAST"}).alias("env")
     )
-    rows = parsed.select(F.posexplode("env.ac").alias("_idx", "ac")).select(
+    return parsed.select(F.posexplode("env.ac").alias("_idx", "ac")).select(
         F.col("_idx").cast("long"), "ac.*"
     )
-    return rows
 
 
 def reconcile_schema(

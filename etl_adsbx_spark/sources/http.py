@@ -91,4 +91,4 @@ def fetch_batch(
     # sanity: payload must be a JSON object (cheap driver-side pre-check)
     json.loads(payload)
     raw = spark.createDataFrame([(payload,)], "value string")
-    return parse_envelope(raw, strict=True)
+    return parse_envelope(raw)

@@ -49,11 +49,25 @@ def test_last_write_wins_within_batch(flat_filtered):
 def test_last_truthy_include_wins_on_duplicate_registration(flat_filtered):
     # two includes rows carry registration N100AA: the reference mutates the
     # shared Feature per match (task.ts:227-233), so the LAST truthy
-    # callsign/group — _idx=1 (DUPE / International) — is what gets emitted;
-    # the Set guard only pins the output position to _idx=0 (task.ts:235-238)
+    # callsign/group — _idx=1 (DUPE / International) — is what gets emitted,
+    # once (task.ts:235-238; see test_filtering_emits_one_row_per_id)
     assert flat_filtered["n100aa"]["callsign"] == "DUPE"
     # group enrichment goes into metadata.group (quirk #7)
     assert flat_filtered["n100aa"]["metadata"]["group"] == "International"
+
+
+def test_filtering_emits_one_row_per_id(spark):
+    # the Set guard (R25, task.ts:235-238): two includes rows carry N100AA
+    # and the batch repeats n100aa, yet it is emitted once. The id-keyed
+    # dict fixtures above would hide a duplicate row, so count raw rows.
+    ids = [
+        r["id"]
+        for r in control(
+            aircraft_df(spark), includes_df(spark),
+            filtering=True, batch_time=BATCH_TIME,
+        ).select("id").collect()
+    ]
+    assert sorted(ids) == ["n100aa", "n200hh", "n300ll"]
 
 
 def test_no_callsign_override_when_include_callsign_falsy(flat_filtered):

@@ -208,13 +208,13 @@ def test_global_running_sum_matches_naive(spark, num_parts):
 def test_flagship_pipeline_plan_shape(spark):
     """Pin the flagship pipeline's physical plan (SURVEY §3.4 lifecycle
     claim): the includes dimension joins as exactly ONE BroadcastHashJoin,
-    and the whole pipeline runs on TWO hash-partition shuffles — one
-    id-keyed exchange SHARED by both keyed dedups (the broadcast join
-    preserves the left partitioning, so first-wins reuses last-wins'
-    shuffle) plus the broadcast-side tiny includes pre-aggregate. No
-    sort-merge join, no cartesian/nested-loop anywhere. A regression that
-    adds a shuffle or demotes the broadcast at 100 TB would 10× the
-    pipeline cost; this test catches it at sf0.001."""
+    and the whole pipeline runs on TWO hash-partition shuffles — the
+    id-keyed exchange of the last-wins dedup plus the broadcast-side tiny
+    includes pre-aggregate (the output is one row per id because both
+    join sides are keyed; no further dedup runs). No sort-merge join, no
+    cartesian/nested-loop anywhere. A regression that adds a shuffle or
+    demotes the broadcast at 100 TB would 10× the pipeline cost; this test
+    catches it at sf0.001."""
     import re
 
     from etl_adsbx_spark.plans.flagship import flagship
@@ -654,6 +654,51 @@ def test_release_pins_frees_blocks_and_recompute_matches(spark):
     ).collect()[0][0]
     assert total2 == total1
     planprobe.release_pins()
+
+
+def test_release_pins_warns_once_on_unpersist_failure(monkeypatch):
+    """A failing ``unpersistRDD`` (e.g. a Spark API change) must not raise
+    out of release_pins, but must not stay silent either: the first
+    failure in the process warns, later ones do not repeat it."""
+    import types
+    import warnings
+    from collections import deque
+
+    from pyspark import SparkContext
+
+    from etl_adsbx_spark import planprobe
+
+    class _BrokenContext:
+        def unpersistRDD(self, rdd_id, blocking):
+            raise RuntimeError("no such method")
+
+    fake = types.SimpleNamespace(_jsc=types.SimpleNamespace(sc=_BrokenContext))
+    monkeypatch.setattr(SparkContext, "_active_spark_context", fake)
+    monkeypatch.setattr(planprobe, "_unpersist_warned", False)
+    monkeypatch.setattr(planprobe, "_live_pins", deque([1, 2]))
+    with pytest.warns(RuntimeWarning, match="unpersistRDD") as rec:
+        assert planprobe.release_pins() == 0
+    assert len(rec) == 1
+    assert not planprobe._live_pins
+    planprobe._live_pins.append(3)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert planprobe.release_pins() == 0
+
+
+def test_driver_java_options_put_user_flags_last(monkeypatch):
+    """The JVM takes the last occurrence of a repeated flag, so the
+    user's SPARK_GRAFT_DRIVER_JAVA_OPTS must follow the heap floor to be
+    able to override it."""
+    from etl_adsbx_spark import session
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_XMS", "1g")
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_JAVA_OPTS", "-Xms4g -XX:-AlwaysPreTouch")
+    assert session.driver_java_options() == (
+        "-Xms1g -XX:+AlwaysPreTouch -Xms4g -XX:-AlwaysPreTouch"
+    )
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_JAVA_OPTS")
+    assert session.driver_java_options() == "-Xms1g -XX:+AlwaysPreTouch"
 
 
 def test_iterative_step_plan_lint(spark):

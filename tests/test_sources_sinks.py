@@ -27,7 +27,7 @@ BAD = '{"msg": "broken", "ac": "not-an-array"}'
 
 def test_parse_envelope_strict(spark):
     raw = spark.createDataFrame([(GOOD,)], "value string")
-    rows = parse_envelope(raw, strict=True).collect()
+    rows = parse_envelope(raw).collect()
     assert [r["_idx"] for r in rows] == [0, 1]   # ingestion order preserved
     assert rows[0]["r"] == "N1" and rows[1]["hex"] == "ae2"
 
@@ -35,7 +35,7 @@ def test_parse_envelope_strict(spark):
 def test_parse_envelope_failfast_aborts(spark):
     raw = spark.createDataFrame([(BAD,)], "value string")
     with pytest.raises(Exception):
-        parse_envelope(raw, strict=True).collect()
+        parse_envelope(raw).collect()
 
 
 def test_permissive_quarantine(spark):
@@ -93,6 +93,39 @@ def test_feature_collection_sink(spark):
     posts = []
     n = submit(feats, posts.append)
     assert n == 3 and len(posts) == 1
+
+
+def test_submit_is_one_collect(spark):
+    """``submit`` takes the feature count from the collect that builds the
+    document: it runs no more Spark jobs than ``feature_collection_json``
+    alone, and returns the number of features it posted. Each call gets a
+    freshly built frame of the same plan, so neither reuses the other's
+    shuffle output."""
+    from etl_adsbx_spark.fixtures import BATCH_TIME, aircraft_df, includes_df
+    from etl_adsbx_spark.pipeline import control, to_features
+
+    def feats():
+        return to_features(
+            control(aircraft_df(spark), includes_df(spark), batch_time=BATCH_TIME)
+        )
+
+    sc = spark.sparkContext
+    posts = []
+    try:
+        sc.setJobGroup("sink-collect", "feature_collection_json")
+        feature_collection_json(feats())
+        sc.setJobGroup("sink-submit", "submit")
+        n = submit(feats(), posts.append)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job records land async
+    tracker = sc.statusTracker()
+    collect_jobs = len(tracker.getJobIdsForGroup("sink-collect"))
+    submit_jobs = len(tracker.getJobIdsForGroup("sink-submit"))
+    assert 0 < submit_jobs <= collect_jobs, (submit_jobs, collect_jobs)
+    doc = json.loads(posts[0])
+    assert n == len(doc["features"]) == 3
 
 
 def test_write_corpus_partitioned_file_budget(spark, tmp_path):

@@ -117,7 +117,7 @@ def test_stateful_last_position(spark):
     deadline = _time.time() + 120
     while _time.time() < deadline:
         a, b = results.get("a"), results.get("b")
-        if a is not None and a["n_seen"] == 2 and b is not None:
+        if a is not None and a["n_seen"] == 2 and b is not None and b["n_seen"] == 1:
             break
         _time.sleep(0.25)
     q.stop()
@@ -155,7 +155,7 @@ def test_streaming_flagship_pipeline(spark):
     micro-batch* job — each tick runs the full control() pipeline on that
     tick's fetch. Model it exactly: a file stream of observation batches,
     foreachBatch invoking control() (transform → last-wins dedup →
-    includes join + enrichment → first-wins) and Feature assembly per
+    includes join + enrichment, one row per id) and Feature assembly per
     batch."""
     import json
     import os
